@@ -44,6 +44,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nypd_arrest_etl_spark.sources.files import has_data_files
+
 
 def dedup_first_writer_wins(df: DataFrame, key: str = "arrest_key", order_col: str | None = None) -> DataFrame:
     """Collapse duplicate keys within a batch.
@@ -101,15 +103,10 @@ def merge_into_parquet(
     target side reads only partition footers for recent years.
     """
     incoming = _with_partition_col(incoming, partition_by, partition_source)
-    target = None
-    if os.path.exists(table_path):
-        try:
-            target = spark.read.parquet(table_path)
-        except Exception:
-            # Append-only path: an unreadable target degrades to a plain
-            # append (duplicates possible, no data loss). The overwrite
-            # variant below must NOT do this — there it would destroy rows.
-            target = None
+    # Only an absent target or one without data files (a first run that
+    # inserted nothing leaves just _SUCCESS) is empty. A read error raises
+    # here, before anything is written: a plain append could duplicate keys.
+    target = spark.read.parquet(table_path) if has_data_files(table_path) else None
     fresh = merge_insert_if_absent(incoming, target, key)
     # Single-pass write: the inserted rowcount rides the write action
     # as an Observation instead of a persist + count + write (which

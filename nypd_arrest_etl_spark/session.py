@@ -1,162 +1,115 @@
-"""SparkSession factory tuned for the engine.
+"""SparkSession factory sized to the host it runs on.
 
-Design notes (100 TB posture):
-- AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
-  and join-strategy re-planning replace hand-tuned partition counts.
-- ``spark.sql.shuffle.partitions`` is a *local* default; on a real
-  cluster AQE's coalescing makes the initial number mostly irrelevant
-  as long as it is high enough (set to 2-3x total cores there).
-- Arrow on for every pandas/Python boundary (Pandas UDFs, toPandas).
-- Session timezone pinned to UTC so timestamp semantics are stable and
-  comparable with external engines (DuckDB oracle, Parquet writers).
+Local mode runs the driver and every task thread in one JVM, so the two
+sizing values are read from the host each time ``get_spark`` is called:
+
+- task slots (``local[n]``, also the default shuffle partition count):
+  the CPUs in this process's affinity mask, capped by a cgroup CPU quota
+  (v1 ``cpu.cfs_quota_us`` / ``cpu.cfs_period_us`` or v2 ``cpu.max``);
+- driver heap: a quarter of ``min(MemTotal, cgroup memory limit)`` (v1
+  ``memory.limit_in_bytes`` or v2 ``memory.max``). The rest stays free
+  for the JVM's off-heap memory, the Python workers and the page cache.
+
+``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` override either
+value. Every other setting is a constant that differs from Spark's
+default, each with its reason.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+HEAP_FRACTION = 4  # driver heap = usable host memory / HEAP_FRACTION
 
 
-def get_spark(
-    app_name: str = "nypd_arrest_etl_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    """Build (or fetch) the tuned SparkSession.
+def _read(path: str) -> str | None:
+    try:
+        with open(path) as f:
+            return f.read()
+    except OSError:
+        return None
 
-    Local mode is a single JVM; ``spark.driver.memory`` is the only
-    memory knob. On a cluster, the same config block applies except
-    master/memory come from the submitter.
+
+def _positive_int(text: str | None) -> int | None:
+    """A cgroup figure; None for an absent file, ``max`` or ``-1``."""
+    try:
+        n = int(text)
+    except (TypeError, ValueError):
+        return None
+    return n if n > 0 else None
+
+
+def host_sizing(
+    env: Mapping[str, str],
+    affinity_cpus: int,
+    read: Callable[[str], str | None] = _read,
+) -> tuple[int, str]:
+    """``(task slots, driver memory)`` for a session on this host.
+
+    Pure given its inputs: ``read(path)`` returns a file's text or None,
+    so a test can stand in for /proc and /sys.
     """
-    cpus = int(DEFAULT_CPUS)
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or cpus
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-    # -Xms pinned to -Xmx (r13): Spark only passes -Xmx for the driver
-    # JVM, leaving InitialHeapSize at ~2g and MinHeapSize at 32m — so
-    # G1 uncommits heap after every full GC (bench.py forces one every
-    # 20 queries; ContextCleaner's periodic GC does the same in
-    # production) and recommits it under the next query's allocation
-    # burst. On this paravirt host the commit/uncommit cycle is the
-    # measured session pathology: young pauses averaged 345 ms and one
-    # full GC took 18.3 s mid-bench (jstat, r13 notes), inflating
-    # whole query cohorts 3-10x. MinHeapSize=Xms stops the shrink side
-    # permanently; pages fault in once and stay. This is the same
-    # posture Spark itself uses for executors on YARN (-Xms=-Xmx) and
-    # what the tuning guide recommends for long-lived SQL drivers.
-    # SPARK_GRAFT_XMS overrides for experiments ("0" disables).
-    # -XX:+AlwaysPreTouch was TRIED here and REJECTED on measurement:
-    # this host's page-fault path intermittently collapses to tens of
-    # MB/s (host-side memory pressure; a 512 MB anonymous first-touch
-    # was timed at minutes during an episode), so eagerly zeroing the
-    # whole heap can stall session startup for half an hour. The -Xms
-    # pin alone gives the durable half of the win — a page faulted in
-    # once is NEVER given back and re-faulted — without betting
-    # startup latency on host fault bandwidth.
-    xms = os.environ.get("SPARK_GRAFT_XMS", driver_mem)
-    _builtin_java_opts = "-XX:ReservedCodeCacheSize=1g" + (
-        f" -Xms{xms}" if xms and xms != "0" else ""
-    )
-    # Transparent hugepages for the heap (madvise mode — the kernel
-    # default here): one 2 MB fault replaces 512 4 KB faults, which on
-    # this host's slow fault path (~10 us/page measured) is the
-    # difference between minutes and seconds of total first-touch
-    # stall, most of it otherwise inside young-GC pauses.
-    # SPARK_GRAFT_THP=0 disables.
-    if os.environ.get("SPARK_GRAFT_THP", "1") != "0":
-        _builtin_java_opts += " -XX:+UseTransparentHugePages"
-    # STW GC thread count, capped for virtualized hosts: with the
-    # JVM-derived default (23 threads at 32 vCPUs) every young pause
-    # needs all 23 vCPUs scheduled simultaneously; under the steal this
-    # host shows in bursts, one preempted GC thread stretches every
-    # pause to multiples of the host scheduling quantum (measured
-    # 345-522 ms average young pauses during steal episodes — 10x the
-    # healthy cost of copying the same survivors). Fewer, longer-lived
-    # GC threads trade parallel copy speed for immunity to vCPU
-    # preemption. SPARK_GRAFT_GC_THREADS overrides; "0" keeps the JVM
-    # default.
-    gc_threads = os.environ.get("SPARK_GRAFT_GC_THREADS", "8")
-    if gc_threads and gc_threads != "0":
-        _builtin_java_opts += f" -XX:ParallelGCThreads={gc_threads}"
+    own = {}  # controller -> this process's cgroup; "" is the v2 hierarchy
+    for line in (read("/proc/self/cgroup") or "").splitlines():
+        _, controllers, path = line.split(":", 2)
+        for c in controllers.split(","):
+            own[c] = path.strip("/")
 
-    builder = (
-        SparkSession.builder.master(master)
+    def cgroup(controller: str, name: str) -> list[str | None]:
+        # v1 mounts each controller under its own name, v2 one hierarchy at
+        # the root. A container may see its own cgroup mounted as the root,
+        # so both the process's path and the mount's root are read.
+        mount = os.path.join("/sys/fs/cgroup", controller)
+        return [read(os.path.join(mount, d, name)) for d in dict.fromkeys((own.get(controller, ""), ""))]
+
+    cpus = _positive_int(env.get("SPARK_GRAFT_CPUS"))
+    if cpus is None:
+        quotas = list(zip(cgroup("cpu", "cpu.cfs_quota_us"), cgroup("cpu", "cpu.cfs_period_us")))
+        quotas += [text.split() for text in cgroup("", "cpu.max") if text]
+        cpus = affinity_cpus
+        for quota, period in quotas:
+            quota, period = _positive_int(quota), _positive_int(period)
+            if quota and period:
+                cpus = min(cpus, -(-quota // period))
+
+    driver_mem = env.get("SPARK_GRAFT_DRIVER_MEM")
+    if not driver_mem:
+        meminfo = (read("/proc/meminfo") or "").splitlines()
+        mem = next(int(line.split()[1]) * 1024 for line in meminfo if line.startswith("MemTotal:"))
+        for text in cgroup("memory", "memory.limit_in_bytes") + cgroup("", "memory.max"):
+            mem = min(mem, _positive_int(text) or mem)
+        driver_mem = f"{mem // HEAP_FRACTION >> 20}m"
+    return cpus, driver_mem
+
+
+def get_spark(app_name: str = "nypd_arrest_etl_spark", shuffle_partitions: int | None = None) -> SparkSession:
+    """Build (or fetch) the local session, sized to the host.
+
+    The sizing and JVM-level settings take effect only when this call
+    launches the JVM; if a session is already running, it is returned.
+    """
+    cpus, driver_mem = host_sizing(os.environ, len(os.sched_getaffinity(0)))
+    spark = (
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.driver.memory", driver_mem)
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        # Spark's default is the host's zone; UTC gives timestamps the same
+        # meaning as in the DuckDB oracle and the parquet writers on any host.
         .config("spark.sql.session.timeZone", "UTC")
+        # Arrow for every pandas boundary: toPandas of 300k rows ~6x faster.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
         # Python DataSource API pushdown (sources/rest.py pushFilters)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
         # reader rejects; read as long (ns since epoch) and convert with
         # exact integer arithmetic (see plans.queries.events_with_ts).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # 32 executor threads + driver share ONE JVM in local mode: at
-        # 24g a long query session (bench = 104 queries x 2 passes,
-        # each broadcasting/caching) sits at the GC cliff — measured
-        # 167-250s for the same bench that runs in 65s at 48g. Keep
-        # headroom; the host has 128 GiB.
-        .config("spark.driver.memory", driver_mem)
-        # The generated-class cache defaults to 100 entries; a 120-query
-        # session generates ~1000 whole-stage classes per pass, so
-        # cross-query shared fragments (same scan/project shapes over
-        # the same tables) get LRU-evicted and recompiled — pure janino
-        # time on the cold path. 4096 entries keeps every shape of the
-        # whole registry resident (a class entry is small; heap cost is
-        # negligible next to the 48g heap).
-        .config("spark.sql.codegen.cache.maxEntries", "4096")
-        # Block-manager debris (shuffle files, broadcasts, dropped
-        # cache entries) is reclaimed by ContextCleaner after a JVM GC.
-        # r12 forced a full STW GC every 2min on the 48g heap to drain
-        # it continuously; the driver's r12 measurements showed that
-        # default taxed every small query 0.1-0.4s (46/60 queries
-        # regressed >10%, total 108->182s) WITHOUT fixing the
-        # anchor-drift pathology it targeted (drift 2.7-8.3 across the
-        # post-change runs). Reverted to Spark's own 30min default
-        # (r13, VERDICT r12 task 1); the env override stays for
-        # experiments. The real leak the 2min GC papered over — r12's
-        # never-unpersisted operator caches — is fixed at the source
-        # this round (caches reverted or given unpersist lifecycles).
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "30min"),
-        )
-        # ReservedCodeCacheSize: a many-query session JIT-compiles
-        # thousands of generated whole-stage classes; the JVM default
-        # (240m) fills after ~100 distinct query shapes, after which
-        # compilation degrades/stops and even trivial queries run
-        # 2-3x slower for the rest of the session (measured this
-        # round: every query late in the bench's sorted order ran a
-        # consistent ~3x slow — e.g. an untouched 0.23s top-terms at
-        # 0.70s — until the reserve was raised; with 1g the same
-        # queries sit back at their r11 values). 1g keeps the whole
-        # registry's compiled code resident — the posture Spark's
-        # tuning guide recommends for long-lived SQL drivers.
-        # (ExplicitGCInvokesConcurrent was ALSO A/B'd here and
-        # rejected: concurrent cycles on a 48g heap produced sustained
-        # multi-minute mark windows that slowed whole query cohorts
-        # 5-10x; the brief periodic STW purge is strictly better for
-        # this batch shape.)
-        # NOTE: builder.config only reaches the JVM when THIS process
-        # launches it (local mode / spark-submit without a pre-existing
-        # session); under client-mode spark-submit pass the same flag
-        # via --driver-java-options. extra_conf entries for this key
-        # are MERGED below (not overwritten) so callers can add flags
-        # without silently dropping the code-cache reserve.
-        .config("spark.driver.extraJavaOptions", _builtin_java_opts)
-        .config("spark.ui.enabled", "false")
-        # keep the Python UDF worker pool alive between queries —
-        # re-forking 32 workers (+ numpy import) costs ~12 s
-        .config("spark.python.worker.reuse", "true")
-        .config("spark.python.worker.idleTimeout", "30min")
+        # Broadcast build sides up to 32 MB (default 10 MB), sparing a shuffle
+        # of the larger side (at sf0.1 one more broadcast join in sketch_stats).
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # InferFiltersFromGenerate synthesizes `size(arr) > 0` under every
         # explode(). For arrays COMPUTED by nested higher-order functions
@@ -170,12 +123,13 @@ def get_spark(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
+        # Keep a many-query session's generated classes (default 100 entries):
+        # without it perfbench query_mix op_s_p50 was ~20% slower (4 vCPU).
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # no web UI: a library session has no one to look at it
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        if k == "spark.driver.extraJavaOptions":
-            v = f"{_builtin_java_opts} {v}"
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -14,6 +14,8 @@ of parallelism and ``spark.sql.files.maxPartitionBytes`` bounds memory.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -106,26 +108,34 @@ def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | None = Non
     return validate_required(df)
 
 
-def high_watermark(spark: SparkSession, table_path: str, col: str = "arrest_date", default: str = "1900-01-01"):
-    """S2: MAX(col) over the target; default on empty/missing
-    (extract.py:42-54). A partition-pruned scan when the table is
-    partitioned by year(col) — only partition metadata + max per file
-    footer is touched."""
-    import os
+def has_data_files(table_path: str) -> bool:
+    """Whether a table directory holds a data file. Like Spark's file
+    index, skip names that start with ``_`` or ``.`` (``_SUCCESS``,
+    ``.crc`` checksums, ``_temporary``) but descend ``k=v`` partitions."""
+    for _root, dirs, files in os.walk(table_path):
+        dirs[:] = [d for d in dirs if "=" in d or not d.startswith(("_", "."))]
+        if any(not f.startswith(("_", ".")) for f in files):
+            return True
+    return False
 
-    if not os.path.exists(table_path):
+
+def high_watermark(spark: SparkSession, table_path: str, col: str = "arrest_date", default: str = "1900-01-01"):
+    """S2: MAX(col) over the target (extract.py:42-54). The default is
+    returned only for a target that is absent or holds no data files (a
+    first run that inserted nothing leaves just ``_SUCCESS``); any read
+    error raises, since a default watermark would re-admit all history.
+    A partition-pruned scan when the table is partitioned by year(col) —
+    only partition metadata + max per file footer is touched."""
+    if not has_data_files(table_path):
         return default
-    try:
-        df = spark.read.parquet(table_path)
-        if "arrest_year" in df.columns:
-            # two-step: max partition value prunes the real scan to the
-            # newest year directory (footer-only elsewhere)
-            ymax = df.agg(F.max("arrest_year")).collect()[0][0]
-            if ymax is not None:
-                df = df.filter(F.col("arrest_year") == ymax)
-        row = df.agg(F.max(col).alias("hwm")).collect()[0]
-    except Exception:
-        return default
+    df = spark.read.parquet(table_path)
+    if "arrest_year" in df.columns:
+        # two-step: max partition value prunes the real scan to the
+        # newest year directory (footer-only elsewhere)
+        ymax = df.agg(F.max("arrest_year")).collect()[0][0]
+        if ymax is not None:
+            df = df.filter(F.col("arrest_year") == ymax)
+    row = df.agg(F.max(col).alias("hwm")).collect()[0]
     return row["hwm"] or default
 
 

@@ -4,6 +4,7 @@ run-twice idempotency (FIXTURES.md F3; reference load.py:112-159)."""
 import json
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from nypd_arrest_etl_spark.operators.clean import clean
 from nypd_arrest_etl_spark.operators.merge import (
@@ -238,3 +239,50 @@ def test_observe_metrics_report_scanned_and_dropped(spark, tmp_path):
     r = run_etl(spark, str(p), str(tmp_path / "t"))
     assert r.inserted == 2
     assert r.details == {"scanned": 4, "cleaned": 2, "dropped_invalid": 2}
+
+
+def _tree(path):
+    """Every file under ``path`` with its bytes."""
+    import os
+
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            p = os.path.join(root, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, path)] = fh.read()
+    return out
+
+
+def test_unreadable_target_raises_and_writes_nothing(spark, tmp_path):
+    """A corrupt target is an error, never an empty table: the watermark
+    does not fall back to its default and the merge does not degrade to
+    a plain append that could duplicate keys."""
+    import os
+
+    target = str(tmp_path / "t")
+    _df(spark, [("A", "2025-01-01", "a")]).coalesce(1).write.parquet(target)
+    (part,) = [f for f in os.listdir(target) if f.endswith(".parquet")]
+    with open(os.path.join(target, part), "r+b") as f:
+        f.truncate(os.path.getsize(f.name) // 2)
+    before = _tree(target)
+
+    # the footer read of schema inference fails inside the JVM
+    with pytest.raises(Py4JJavaError):
+        high_watermark(spark, target)
+    with pytest.raises(Py4JJavaError):
+        merge_into_parquet(spark, _df(spark, [("A", "2025-02-01", "dup")]), target)
+    assert _tree(target) == before
+
+
+def test_target_without_data_files_is_empty(spark, tmp_path):
+    """A first run that inserts nothing leaves only ``_SUCCESS``; the
+    next run sees an empty table: default watermark, plain first insert."""
+    target = tmp_path / "t"
+    target.mkdir()
+    (target / "_SUCCESS").write_bytes(b"")
+
+    assert high_watermark(spark, str(target)) == "1900-01-01"
+    batch = _df(spark, [("A", "2025-01-01", "a"), ("A", "2025-01-02", "b")])
+    assert merge_into_parquet(spark, batch, str(target)) == 1
+    assert str(high_watermark(spark, str(target))) == "2025-01-01"
